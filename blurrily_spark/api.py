@@ -22,8 +22,10 @@ Semantics mirrored from the reference:
   overwrite commit replaces the reference's rename(2), storage.c:371-374);
 * a ClosedError-equivalent guard after close() (map_ext.c:11-21).
 
-Puts are buffered driver-side and flushed lazily into the postings
-DataFrame (arrival order preserved => first-wins dedup is deterministic).
+Puts are tokenized on the driver and buffered as ``(ref, weight,
+trigrams)`` rows; the next find, stats, delete or save flushes them into
+the postings DataFrame in one job. First-wins dedup is exact because
+put() checks the driver-side ref set before buffering.
 This facade targets interactive/compat use; the batch pipeline entry points
 (operators/, plans/) are the 10^12-row path.
 """
@@ -39,7 +41,8 @@ from pyspark.sql import functions as F
 from blurrily_spark.config import LIMIT_DEFAULT, LIMIT_RANGE
 from blurrily_spark.functions.tokenizer import normalize_py, trigrams_py
 from blurrily_spark.operators.find import find_one
-from blurrily_spark.operators.index import POSTINGS_COLS, build_postings
+# unused here, but perfbench --trace wraps api.build_postings by name
+from blurrily_spark.operators.index import POSTINGS_COLS, build_postings  # noqa: F401
 from blurrily_spark.operators.index import stats as postings_stats
 
 REF_RANGE = (1, 1 << 31)     # lib/blurrily/defaults.rb:8
@@ -77,8 +80,7 @@ class Map:
     def __init__(self, spark: SparkSession, postings: DataFrame | None = None):
         self._spark = spark
         self._postings = postings  # flushed state (None = empty)
-        self._buffer: list[tuple[int, str, int, int]] = []  # (seq, needle, ref, weight)
-        self._seq = 0
+        self._buffer: list[tuple[int, int, list[int]]] = []  # (ref, weight, trigrams)
         # None = unknown (lazy): loading a snapshot must NOT run a driver
         # collect over every stored ref -- the set is materialized only when
         # the first put() actually needs the membership test.
@@ -127,12 +129,12 @@ class Map:
         if ref in self._known_refs():
             return 0
         norm = normalize_py(needle)
-        n_trigrams = len(trigrams_py(norm))
-        self._buffer.append((self._seq, needle, ref, int(weight or 0)))
-        self._seq += 1
+        tg = trigrams_py(norm)
+        weight = int(weight or 0)
+        self._buffer.append((ref, weight if weight > 0 else len(norm), tg))
         self._refs.add(ref)
         self._clean_path = None
-        return n_trigrams
+        return len(tg)
 
     def delete(self, ref: int) -> None:
         self._guard()
@@ -169,8 +171,7 @@ class Map:
         self._flush()
         if self._postings is None:
             return []
-        rows = find_one(self._postings, needle, limit=limit).collect()
-        return [(r["ref"], r["matches"], r["weight"]) for r in rows]
+        return [tuple(r) for r in find_one(self._postings, needle, limit).collect()]
 
     def stats(self) -> dict[str, int]:
         self._guard()
@@ -261,16 +262,14 @@ class Map:
         if not self._buffer:
             return
         batch = self._spark.createDataFrame(
-            self._buffer, "seq long, needle string, ref long, weight int"
-        )
-        new_postings = build_postings(batch, order_col="seq")
-        self._postings = (
-            new_postings
-            if self._postings is None
-            else self._postings.select(*POSTINGS_COLS).unionByName(new_postings)
-        )
-        # keep the lineage shallow for long interactive sessions
-        self._postings = self._postings.localCheckpoint()
+            self._buffer, "ref long, weight int, tg array<int>"
+        ).select(F.explode("tg").alias("trigram"), "ref", "weight")
+        if self._postings is not None:
+            batch = self._postings.select(*POSTINGS_COLS).unionByName(batch)
+        # one job per flush; the narrow coalesce keeps the partition count
+        # (and so the task count of every later FIND) from growing per flush
+        sc = self._spark.sparkContext
+        self._postings = batch.coalesce(sc.defaultParallelism).localCheckpoint()
         self._buffer.clear()
 
 

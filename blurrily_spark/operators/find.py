@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blurrily_spark.config import LIMIT_DEFAULT
-from blurrily_spark.functions.tokenizer import add_trigrams, normalize
+from blurrily_spark.functions.tokenizer import add_trigrams, normalize, tokenize_py
 
 
 def find(
@@ -309,10 +309,16 @@ def find_one(
 ) -> DataFrame:
     """Single-needle FIND (the reference's ``Map#find`` signature).
 
-    Compiles to TakeOrderedAndProject (no window) -- the single-query fast
-    path. Returns ``(ref, matches, weight)`` ordered like F5.
+    The needle is tokenized on the driver (:func:`tokenize_py`), so the plan
+    is a trigram filter, a groupBy(ref) and one TakeOrderedAndProject: 2
+    jobs, with no query DataFrame, broadcast, window or Python UDF. Returns
+    ``(ref, matches, weight)`` ordered like F5.
     """
-    spark = postings.sparkSession
-    q = spark.createDataFrame([(0, needle)], "query_id long, needle string")
-    res = find(postings, q, limit=limit)
-    return res.orderBy("rank").select("ref", "matches", "weight")
+    eff = LIMIT_DEFAULT if limit is None or limit <= 0 else int(limit)
+    return (
+        postings.where(F.col("trigram").isin(tokenize_py(needle) or []))
+        .groupBy("ref")
+        .agg(F.count(F.lit(1)).alias("matches"), F.min("weight").alias("weight"))
+        .orderBy(F.col("matches").desc(), F.col("weight").asc(), F.col("ref").asc())
+        .limit(eff)
+    )

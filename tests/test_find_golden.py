@@ -165,18 +165,38 @@ def test_stats(spark):
 
 
 def test_batch_find_multiple_queries(spark):
-    p = _postings(spark, [("london", 1), ("paris", 2)])
+    # docs 3-7 share no trigram with london/paris/zzz; the exotic needles
+    # pin find_one's driver-side tokenizer equal to find's column pipeline
+    p = _postings(spark, [
+        ("london", 1), ("paris", 2), ("日本語 text", 3), ("ﬁnance", 4),
+        ("Dôme de Puy", 5), ("456", 6), ("New York", 7),
+    ])
+    exotic = ["日本語 text", "ﬁnance", "Puy-de-Dôme", "123", "new\nyork", "text "]
     q = spark.createDataFrame(
-        [(10, "london"), (20, "paris"), (30, "zzz")],
+        [(10, "london"), (20, "paris"), (30, "zzz")]
+        + [(40 + i, n) for i, n in enumerate(exotic)],
         "query_id long, needle string",
     )
-    res = find(p, q).collect()
+    res = find(p, q).orderBy("query_id", "rank").collect()
     by_q = {}
     for r in res:
         by_q.setdefault(r["query_id"], []).append((r["ref"], r["matches"], r["weight"]))
     assert by_q[10] == [(1, 7, 6)]
     assert by_q[20] == [(2, 6, 5)]
     assert 30 not in by_q
+    for i, needle in enumerate(exotic):
+        assert by_q[40 + i], repr(needle)
+        assert _triples(find_one(p, needle)) == by_q[40 + i], repr(needle)
+
+
+def test_find_one_plan_shape(spark):
+    # stored postings are materialized, as Map keeps them; the single-needle
+    # plan is one top-k over a filtered groupBy, with no query-side nodes
+    p = _postings(spark, [("london", 1), ("paris", 2)]).localCheckpoint()
+    plan = find_one(p, "ﬁnance london")._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject" in plan
+    for node in ["Window", "ArrowEvalPython", "BatchEvalPython", "BroadcastExchange"]:
+        assert node not in plan, node
 
 
 def test_per_query_limit_col(spark):
